@@ -1,18 +1,18 @@
 """One benchmark run, in the child process that ``run.py`` starts.
 
-Set-up runs ``SETUPS`` times: the first from process start (JVM launch,
-session, inputs, one untimed first call of every op shape); the others build
-a new SparkSession on the running SparkContext and do the same again.
-``setup_s`` is their median.
-Then one closed-loop client times ops for ``--seconds`` on the last session,
-the outputs are checked against independent references, and the result is
-written as JSON for ``run.py``.
+``setup_s`` is the cold set-up: from process start through JVM launch and
+``get_spark``, the inputs, and one untimed first call of every op shape.
+Then one closed-loop client runs whole cycles of ops for at least
+``--seconds``, the outputs are checked against independent references, and
+the result is written as JSON for ``run.py``.
 
-With ``--trace 1`` the session also writes an uncompressed event log and
-runs the PySpark UDF profiler; spans placed around each call into a layer
-are kept; after the traced loop the same loop runs again with spans and
-profiler off, which gives the tracing overhead; and each layer is probed on
-its own.  End-to-end numbers are only reported from untraced runs.
+With ``--trace 1`` the session also writes an uncompressed event log, and
+spans placed around each call into a layer are kept.  Each op of the loop
+runs twice back to back, once with spans and the PySpark UDF profiler on and
+once with both off, the order alternating from op to op; the ratio of the
+two gives the tracing overhead.  The event log stays on for both, so its
+cost is not in that ratio.  Each layer is then probed on its own.
+End-to-end numbers are only reported from untraced runs.
 """
 
 from __future__ import annotations
@@ -39,19 +39,22 @@ from polycheck_spark.data.polygons import synthetic_layer  # noqa: E402
 from polycheck_spark.geo.kernel import contains_csr, pack_polygons_csr  # noqa: E402
 from polycheck_spark.operators import pip_join as PJ  # noqa: E402
 
-SETUPS = 3
 CPUS = len(os.sched_getaffinity(0))  # what `nproc` reports
 # a compile failure line in the shape the JVM logs it (for --plant codegen)
 PLANTED_CODEGEN_LINE = ("ERROR CodeGenerator: Failed to compile the generated "
                         "Java code. (planted by perfbench --plant codegen)")
 
 
+PROFILER_CONF = "spark.sql.pyspark.udf.profiler"
+
+
 def tail_percentile(values: list[float]) -> tuple[float, float]:
     """(percentile, value): the highest percentile with at least ten samples
-    beyond it; with ten samples or fewer, the maximum (percentile 100)."""
+    beyond it.  Below 100 samples that percentile is under p90, which is no
+    tail, so the tail is then the maximum (percentile 100)."""
     xs = sorted(values)
     n = len(xs)
-    if n <= 10:
+    if n < 100:
         return 100.0, xs[-1]
     return 100.0 * (n - 10) / n, xs[n - 11]
 
@@ -92,17 +95,20 @@ class Run:
                 "spark.eventLog.enabled": "true",
                 "spark.eventLog.dir": "file://" + log_dir,
                 "spark.eventLog.compress": "false",
-                "spark.sql.pyspark.udf.profiler": "perf",
+                PROFILER_CONF: "perf",
             })
         self.spark = get_spark("perfbench", master=f"local[{CPUS}]",
                                shuffle_partitions=CPUS, **extra)
         self.spark.sparkContext.setLogLevel("ERROR")
         self.profile = self.trace
 
-    def new_session(self):
-        """A fresh SparkSession (its own SQL conf, catalog and plans) on the
-        running SparkContext, JVM and Python workers."""
-        self.spark = self.spark.newSession()
+    def set_tracing(self, on: bool):
+        """Spans and the UDF profiler on or off."""
+        self.tracer.enabled = self.profile = on
+        if on:
+            self.spark.conf.set(PROFILER_CONF, "perf")
+        else:
+            self.spark.conf.unset(PROFILER_CONF)
 
     def stop_session(self):
         if self.spark is not None:
@@ -111,8 +117,9 @@ class Run:
 
     # -- ops -------------------------------------------------------------------
 
-    def op(self, kind: str, fn, *, timed: bool = True, expect: str | None = None):
+    def op(self, kind: str, fn, *, keep: bool = True, expect: str | None = None):
         """Run one op under its own job group.  Returns (result, seconds, ok).
+        ``keep``: add it to the ops the per-op accounting covers.
         ``expect``: the op must raise an error containing this text."""
         self.n_op += 1
         op_id = f"{kind}#{self.n_op}"
@@ -140,7 +147,7 @@ class Run:
         rec = {"op_id": op_id, "kind": kind, "t0": t0, "t1": t1, "ok": ok}
         if self.profile:
             rec["udf_s"] = pip_udf_seconds(self.spark)
-        if timed:
+        if keep:
             self.ops.append(rec)
         self.last_op = rec
         return result, t1 - t0, ok
@@ -206,21 +213,18 @@ class PipDense:
 
     def warm(self):
         small = self.pages(self.WARM_PAGES)
-        self.run.op("warm:pip_pass", lambda: self._pass(small), timed=False)
+        self.run.op("warm:pip_pass", lambda: self._pass(small), keep=False)
 
-    def loop(self, seconds: float) -> dict:
-        walls, t_start = [], time.time()
-        while time.time() - t_start < seconds:
-            n, dt, ok = self.run.op("pip_pass", lambda: self._pass(self.pts))
-            if ok:
-                walls.append(dt)
-                self.hits.append(n)
-        wall = time.time() - t_start
-        p50 = statistics.median(walls)
-        pct, tail = tail_percentile(walls)
-        return {"docs_per_s": self.PAGES / p50, "ops_per_s": len(walls) / wall,
-                "op_p50_s": p50, "op_tail_s": tail, "_tail_pct": pct,
-                "_n": len(walls), "pip_docs_per_s": self.PAGES / p50}
+    def cycle(self):
+        return [("pip_pass", lambda: self._pass(self.pts))]
+
+    def record(self, kind: str, n: int):
+        self.hits.append(n)
+
+    def metrics(self, walls: list[float], wall: float) -> dict:
+        m = loop_metrics(walls, wall)
+        m["docs_per_s"] = m["pip_docs_per_s"] = self.PAGES / m["op_p50_s"]
+        return m
 
     def verify(self):
         run = self.run
@@ -250,10 +254,16 @@ class Sf01Queries:
     untimed first call of each query collects its rows instead, and those
     rows are checked against the query's DuckDB oracle after set-up."""
 
+    # the sizes of the repository's sf0.01 tables: per-query cost is nearly
+    # the same at the 5,000 docs of sf0.1, whose DuckDB oracles take 15 s
     N_DOCS = 500
-    N_VECS = 200
-    QUERIES = ["pip_join", "tile_assignment", "raster_lookup", "knn",
-               "hotspot_regions"]
+    N_VECS = 500
+    # one row or more per operator layer: pip_join (with geo.cells),
+    # visibility, knn, range_join, similarity, and dedup with text tokens.
+    # An even count makes the median the mean of two queries' latencies.
+    QUERIES = ["pip_join", "raster_lookup", "knn", "hotspot_regions",
+               "range_join", "near_dup", "dedup_survivors",
+               "dedup_verified_clusters"]
 
     def __init__(self, run: Run):
         import __spark_entry__ as E
@@ -280,26 +290,23 @@ class Sf01Queries:
     def warm(self):
         for q in self.QUERIES:
             rows, _, ok = self.run.op(f"warm:{q}", lambda q=q: self._query(q, "collect"),
-                                      timed=False)
+                                      keep=False)
             if ok:
                 self.warm_rows[q] = rows
 
-    def loop(self, seconds: float) -> dict:
-        walls, t_start = [], time.time()
-        while time.time() - t_start < seconds:  # whole cycles only
-            for q in self.run.rng.permutation(self.QUERIES):
-                n, dt, ok = self.run.op(f"q:{q}", lambda q=q: self._query(q))
-                if ok:
-                    walls.append(dt)
-                    self.counts[q].append(n)
-        wall = time.time() - t_start
-        p50 = statistics.median(walls)
-        pct, tail = tail_percentile(walls)
-        return {"docs_per_s": len(walls) * self.N_DOCS / wall,
-                "ops_per_s": len(walls) / wall, "op_p50_s": p50,
-                "op_tail_s": tail, "_tail_pct": pct, "_n": len(walls),
-                "queries_per_s": len(walls) / wall, "query_p50_s": p50,
-                "query_tail_s": tail}
+    def cycle(self):
+        return [(f"q:{q}", lambda q=q: self._query(q))
+                for q in self.run.rng.permutation(self.QUERIES)]
+
+    def record(self, kind: str, n: int):
+        self.counts[kind[2:]].append(n)
+
+    def metrics(self, walls: list[float], wall: float) -> dict:
+        m = loop_metrics(walls, wall)
+        m["docs_per_s"] = len(walls) * self.N_DOCS / wall
+        m.update(queries_per_s=m["ops_per_s"], query_p50_s=m["op_p50_s"],
+                 query_tail_s=m["op_tail_s"])
+        return m
 
     def verify(self):
         import duckdb
@@ -331,6 +338,39 @@ JOB_PAGES = 100_000
 JOB_BUCKETS = 8
 
 
+def loop_metrics(walls: list[float], wall: float) -> dict:
+    p50 = statistics.median(walls)
+    pct, tail = tail_percentile(walls)
+    return {"ops_per_s": len(walls) / wall, "op_p50_s": p50, "op_tail_s": tail,
+            "_tail_pct": pct, "_n": len(walls)}
+
+
+def closed_loop(run: Run, wl, seconds: float, paired: bool = False):
+    """Whole cycles of the workload's ops, one at a time, until ``seconds``
+    have passed.  Returns ({traced: walls of its ok ops}, loop wall time).
+
+    ``paired`` (traced runs): each op runs twice back to back, traced and
+    untraced, the traced one first on every other op; only the traced ops
+    enter the per-op accounting."""
+    walls: dict[bool, list[float]] = {True: [], False: []}
+    t_start, k = time.time(), 0
+    while time.time() - t_start < seconds:
+        for kind, fn in wl.cycle():
+            modes = ((True, False) if k % 2 == 0 else (False, True)) if paired \
+                else (run.trace,)
+            k += 1
+            for traced in modes:
+                if paired:
+                    run.set_tracing(traced)
+                n, dt, ok = run.op(kind, fn, keep=traced)
+                if ok:
+                    walls[traced].append(dt)
+                    wl.record(kind, n)
+    if paired:
+        run.set_tracing(True)
+    return walls, time.time() - t_start
+
+
 def job_probe(run: Run) -> dict:
     """The same pip_join through ``io.tables``: ``pip_join_job.run_job``
     fresh, then in a new out dir a run that fails before a seeded bucket
@@ -346,12 +386,12 @@ def job_probe(run: Run) -> dict:
             return pip_join_job.run_job(run.spark, JOB_PAGES, JOB_BUCKETS, out_dir,
                                         fail_on=fail_on)
 
-    fresh, fresh_s, ok1 = run.op("job_fresh", lambda: job(fresh_dir), timed=False)
+    fresh, fresh_s, ok1 = run.op("job_fresh", lambda: job(fresh_dir), keep=False)
     fresh_op = run.last_op
     run.op("job_failed", lambda: job(res_dir, lambda k: k == fail_bucket),
-           timed=False, expect="injected failure")
+           keep=False, expect="injected failure")
     uncommitted = JOB_BUCKETS - len(CheckpointedWriter(res_dir).completed_buckets())
-    resumed, resume_s, ok2 = run.op("job_resume", lambda: job(res_dir), timed=False)
+    resumed, resume_s, ok2 = run.op("job_resume", lambda: job(res_dir), keep=False)
     if not (ok1 and ok2):
         return {}
     cols = ["url", "polygon_id", "cell_id", "lon", "lat", "text_sha"]
@@ -507,35 +547,28 @@ def main():
     run = Run(args)
     import bench  # the repo's frozen bench: its single-core star8 kernel canary
     with PeakRss() as rss:
-        star8_start = run.timed("geo.kernel", "contains", bench.bench_kernel_pip)[0] \
-            if run.trace else None
-        setups, warm_s = [], []
-        for k in range(SETUPS):
-            if k == 0:
-                t0 = t_process
-                _, get_spark_s = run.timed("session", "get_spark", run.start_session)
-                wl = WORKLOADS[args.workload](run)
-            else:
-                t0 = time.time()
-                run.timed("session", "newSession", run.new_session)
-            t1 = time.time()
-            wl.inputs()
-            wl.warm()
-            warm_s.append(time.time() - t1)
-            setups.append(time.time() - t0)
+        _, get_spark_s = run.timed("session", "get_spark", run.start_session)
+        wl = WORKLOADS[args.workload](run)
+        t_warm = time.time()
+        wl.inputs()
+        wl.warm()
+        warm_s = time.time() - t_warm
+        setup_s = time.time() - t_process
         if args.plant == "codegen":
             print(PLANTED_CODEGEN_LINE, file=sys.stderr, flush=True)
+        star8_start = run.timed("geo.kernel", "contains", bench.bench_kernel_pip)[0] \
+            if run.trace else None
 
         t_loop = time.time()
-        e2e = wl.loop(args.seconds)
-        phases = {"process_to_loop_s": t_loop - t_process, "loop_s": time.time() - t_loop}
-        untraced = None
         if run.trace:
-            traced_ops = list(run.ops)
-            run.tracer.enabled, run.profile = False, False
-            untraced = wl.loop(args.seconds)
-            run.ops = traced_ops
-            run.tracer.enabled, run.profile = True, True
+            walls, _ = closed_loop(run, wl, args.seconds, paired=True)
+            e2e = wl.metrics(walls[True], sum(walls[True]))
+            untraced = wl.metrics(walls[False], sum(walls[False]))
+            overhead = sum(walls[True]) / sum(walls[False]) - 1.0
+        else:
+            walls, wall = closed_loop(run, wl, args.seconds)
+            e2e = wl.metrics(walls[False], wall)
+        phases = {"process_to_loop_s": t_loop - t_process, "loop_s": time.time() - t_loop}
         run.spark.sparkContext.setJobGroup("verify", "verify")
         t_verify = time.time()
         wl.verify()
@@ -545,12 +578,12 @@ def main():
         star8_end = run.timed("geo.kernel", "contains", bench.bench_kernel_pip)[0] \
             if run.trace else None
         run.stop_session()
-    e2e["setup_s"] = statistics.median(setups)
+    e2e["setup_s"] = setup_s
     e2e["peak_rss_mb"] = rss.peak_mib
 
     result = {"correct": run.failed == 0, "attempted": run.attempted,
               "failed": run.failed, "errors": run.errors[:20],
-              "setups_s": setups, "phases": phases, "e2e": e2e, "workload": args.workload,
+              "phases": phases, "e2e": e2e, "workload": args.workload,
               "seed": args.seed}
     if run.trace:
         stats = eventlog.group_stats(
@@ -561,10 +594,10 @@ def main():
         layer["pip_join.udf_s"] = statistics.mean(o["udf_s"] for o in ops)
         layer.update({k: v for k, v in probe.items() if not k.startswith("_")})
         layer["session.get_spark_s"] = get_spark_s
-        layer["session.warmup_s"] = statistics.median(warm_s)
+        layer["session.warmup_s"] = warm_s
         layer["kernel.star8_pts_per_s"] = star8_start
         layer["kernel.star8_end_pts_per_s"] = star8_end
-        layer["trace.overhead_ratio"] = e2e["op_p50_s"] / untraced["op_p50_s"] - 1.0
+        layer["trace.overhead_ratio"] = overhead
         job = probe.get("_job", {})
         extra = {k: v for k, v in job.items() if not k.startswith("_")}
         for o in spark_op_stats(list(job.get("_ops", {}).values()), stats).values():
@@ -589,7 +622,7 @@ def main():
                        "self_s": result["self_s"],
                        "e2e_traced": e2e, "e2e_untraced": untraced,
                        "overhead": {k: e2e[k] / untraced[k] - 1.0
-                                    for k in ("docs_per_s", "ops_per_s", "op_p50_s", "op_tail_s")},
+                                    for k in ("ops_per_s", "op_p50_s", "op_tail_s")},
                        "ops": per_op, "spans": run.tracer.spans}, f)
     with open(args.result, "w") as f:
         json.dump(result, f)

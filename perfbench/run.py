@@ -10,14 +10,17 @@ Workloads (one closed-loop client, ``local[nproc]`` Spark):
   Its traced run also runs ``pip_join_job.run_job`` through ``io.tables``:
   fresh, failed at a seeded bucket, resumed.
 * ``sf01_queries``: a seeded order of ``__spark_entry__.queries()`` rows,
-  each built then counted, over seeded ``documents``/``embeddings`` tables.
+  at least one per operator layer, each built then counted, over seeded
+  ``documents``/``embeddings`` tables of the sf0.01 sizes.
 
 The last stdout line is ``{"correct", "attempted", "failed", "metrics"}``.
 With ``--trace 0`` the metrics are the end-to-end ones: ``setup_s``,
 ``docs_per_s``, ``ops_per_s``, ``op_p50_s``, ``op_tail_s``, ``peak_rss_mb``;
-an op is a pip pass or a query.  With ``--trace 1`` they are the per-layer
-metrics, and the spans, per-op Spark accounting and workload-specific layer
-metrics go to ``.perfbench/out/trace-<workload>-seed<n>.json``.  Lines before the result
+an op is a pip pass or a query; ``setup_s`` is the cold set-up, from
+process start to every op shape run once.  With ``--trace 1`` they are the
+per-layer metrics, and the spans, per-op Spark accounting and
+workload-specific layer metrics go to
+``.perfbench/out/trace-<workload>-seed<n>.json``.  Lines before the result
 print every metric with its unit, under the names the workload defines
 (``pip_docs_per_s``, ``query_p50_s``, ``resume_s``, ``error_rate``, ...).
 
@@ -122,7 +125,6 @@ def main() -> int:
         "TMPDIR": os.path.join(run_dir, "tmp"),
         # the short-lived spark-submit launcher JVM: no /tmp/hsperfdata file
         "SPARK_LAUNCHER_OPTS": "-XX:-UsePerfData",
-        "SPARK_GRAFT_DRIVER_MEM": "1g",
         "PERFBENCH_T0": repr(time.time()),
     })
     cmd = [sys.executable, os.path.join(HERE, "harness.py"),
@@ -181,8 +183,7 @@ def main() -> int:
     print(f"# {args.workload} seed={args.seed} seconds={args.seconds} "
           f"trace={args.trace} ops={e2e['_n']}"
           + (" (end-to-end values below are traced)" if args.trace else ""))
-    print(f"#   setups_s={[round(x, 2) for x in res['setups_s']]} "
-          f"phases_s={ {k: round(v, 2) for k, v in res['phases'].items()} }")
+    print(f"#   phases_s={ {k: round(v, 2) for k, v in res['phases'].items()} }")
     for k, v in e2e.items():
         if not k.startswith("_"):
             print(f"#   {k} = {v:.6g} {UNITS[k]}")

@@ -2,13 +2,14 @@
 
 The benchmark may only read inside its own checkout, so the tables that
 ``__spark_entry__.queries()`` rows read from an sf directory are generated
-here from the run's seed, with the shape of the repository's sf test tables:
+here from the run's seed.  Only the columns the cycled queries read are
+written.  Sizes follow the repository's sf0.01 tables (500 documents, 500
+embeddings), distributions its sf tables, as measured on sf0.1:
 
-* ``documents``: doc_id, text (10-100 tokens over a 30-word vocabulary),
-  lang (40% en, 15% each de/fr/es/zh), source (20 sources round-robin),
-  n_chars; 5% of the docs are an earlier doc's text plus `` dup``, the
-  near-duplicates the dedup rows look for.
-* ``embeddings``: vec_id, 64-d float32 embedding ~ N(0, 0.125), label 0-9.
+* ``documents``: doc_id, text of 10-100 tokens (uniform, mean 54) drawn
+  uniformly from a 30-word vocabulary; 5% of the docs are another doc's
+  text plus `` dup``, the near-duplicates the dedup rows look for.
+* ``embeddings``: vec_id, 64-d float32 embedding ~ N(0, 0.125).
 """
 
 from __future__ import annotations
@@ -22,10 +23,7 @@ import pyarrow.parquet as pq
 VOCAB = ("spark window merge table column vector stream value data small "
          "fast row the agg key query a scan batch part line order sort hash "
          "slow group filter big customer join").split()
-LANGS = ("en", "de", "fr", "es", "zh")
-LANG_P = (0.40, 0.15, 0.15, 0.15, 0.15)
 DUP_FRACTION = 0.05
-N_SOURCES = 20
 EMB_DIM = 64
 
 
@@ -37,13 +35,9 @@ def documents(rng: np.random.Generator, n_docs: int) -> pa.Table:
             continue
         n_tok = int(rng.integers(10, 101))
         texts.append(" ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), n_tok)))
-    langs = rng.choice(len(LANGS), size=n_docs, p=LANG_P)
     return pa.table({
         "doc_id": pa.array(np.arange(n_docs, dtype=np.int64)),
         "text": pa.array(texts, pa.string()),
-        "lang": pa.array([LANGS[k] for k in langs], pa.string()),
-        "source": pa.array([f"src{i % N_SOURCES}" for i in range(n_docs)], pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
 
 
@@ -53,7 +47,6 @@ def embeddings(rng: np.random.Generator, n_vecs: int) -> pa.Table:
     return pa.table({
         "vec_id": pa.array(np.arange(n_vecs, dtype=np.int64)),
         "embedding": emb.cast(pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n_vecs).astype(np.int32)),
     })
 
 

@@ -17,9 +17,11 @@ def test_planted_codegen_line_is_a_failure():
 
 def test_tail_percentile():
     assert tail_percentile([3.0, 1.0, 2.0]) == (100.0, 3.0)
-    xs = [float(i) for i in range(1, 41)]  # 40 samples
+    # under 100 samples ten beyond would sit below p90: the maximum
+    assert tail_percentile([float(i) for i in range(1, 41)]) == (100.0, 40.0)
+    xs = [float(i) for i in range(1, 201)]  # 200 samples
     pct, v = tail_percentile(xs)
-    assert pct == 75.0
+    assert pct == 95.0
     assert sum(x > v for x in xs) == 10
 
 

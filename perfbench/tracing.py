@@ -10,7 +10,6 @@ function call per boundary and nothing else.
 from __future__ import annotations
 
 import contextlib
-import json
 import time
 from collections import defaultdict
 
@@ -50,7 +49,3 @@ class Tracer:
             if s["end"] is not None:
                 out[s["layer"]] += s["end"] - s["start"] - child_time[s["id"]]
         return dict(out)
-
-    def write(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump({"spans": self.spans, "self_s": self.self_times()}, f)
